@@ -12,7 +12,8 @@ import graft.model._
 /** JSON config loader — the engine's re-expression of the reference's
   * `sync_tasks.config_json` parser (reference pkg/config/config.go:175-344)
   * plus the backup-task config (pkg/backup/executor.go:157-271,
-  * cronjob.go:107-125).
+  * cronjob.go:107-125); every cron-driven family's entries parse
+  * through its [[Scheduled]] registry row.
   *
   * Shape:
   * {{{
@@ -46,22 +47,9 @@ object ConfigReader {
     * standing in for SQLite `monitoring_log`. */
   final case class EngineConfig(
       syncTasks: Seq[SyncTaskSpec] = Nil,
-      backupTasks: Seq[BackupSpec] = Nil,
-      trainingTasks: Seq[TrainingExportSpec] = Nil,
-      optimizeTasks: Seq[OptimizeSpec] = Nil,
-      dqTasks: Seq[DqSpec] = Nil,
       decontamTasks: Seq[DecontamSpec] = Nil,
-      ivmTasks: Seq[graft.model.IvmTaskSpec] = Nil,
-      annIndexTasks: Seq[graft.model.AnnIndexSpec] = Nil,
-      checksumTasks: Seq[ChecksumSpec] = Nil,
-      annEvalTasks: Seq[AnnEvalSpec] = Nil,
-      modelEvalTasks: Seq[ModelEvalSpec] = Nil,
-      privacyTasks: Seq[PrivacySpec] = Nil,
-      graphTasks: Seq[GraphTaskSpec] = Nil,
-      retrainTasks: Seq[RetrainSpec] = Nil,
-      driftTasks: Seq[DriftSpec] = Nil,
-      graphHealthTasks: Seq[GraphHealthSpec] = Nil,
-      erTasks: Seq[graft.model.ErTaskSpec] = Nil,
+      ivmTasks: Seq[IvmTaskSpec] = Nil,
+      scheduled: Seq[Scheduled.Task[_]] = Nil, // every cron-driven family, registry order
       metricsDir: Option[String] = None)
 
   private val mapper = new ObjectMapper()
@@ -73,147 +61,31 @@ object ConfigReader {
   def parse(json: String): EngineConfig = {
     val root = mapper.readTree(json)
     EngineConfig(
-      syncTasks = root.path("syncTasks").elements.asScala.toSeq.flatMap { n =>
-        try Some(parseSyncTask(n))
-        catch { case e: Exception =>
-          logger.warn(s"skipping malformed sync task ${n.path("id").asText("?")}: ${e.getMessage}")
-          None
-        }
-      },
-      backupTasks = root.path("backupTasks").elements.asScala.toSeq.flatMap { n =>
-        try Some(parseBackupTask(n))
-        catch { case e: Exception =>
-          logger.warn(s"skipping malformed backup task ${n.path("id").asText("?")}: ${e.getMessage}")
-          None
-        }
-      },
-      trainingTasks = root.path("trainingTasks").elements.asScala.toSeq.flatMap { n =>
-        try Some(parseTrainingTask(n))
-        catch { case e: Exception =>
-          logger.warn(s"skipping malformed training task ${n.path("id").asText("?")}: ${e.getMessage}")
-          None
-        }
-      },
-      optimizeTasks = root.path("optimizeTasks").elements.asScala.toSeq.flatMap { n =>
-        try Some(parseOptimizeTask(n))
-        catch { case e: Exception =>
-          logger.warn(s"skipping malformed optimize task ${n.path("id").asText("?")}: ${e.getMessage}")
-          None
-        }
-      },
-      dqTasks = root.path("dqTasks").elements.asScala.toSeq.flatMap { n =>
-        try Some(parseDqTask(n))
-        catch { case e: Exception =>
-          logger.warn(s"skipping malformed dq task ${n.path("id").asText("?")}: ${e.getMessage}")
-          None
-        }
-      },
-      annIndexTasks = root.path("annIndexTasks").elements.asScala.toSeq.flatMap { n =>
-        try Some(parseAnnIndexTask(n))
-        catch { case e: Exception =>
-          logger.warn(s"skipping malformed annIndex task ${n.path("id").asText("?")}: ${e.getMessage}")
-          None
-        }
-      },
-      ivmTasks = root.path("ivmTasks").elements.asScala.toSeq.flatMap { n =>
-        try Some(parseIvmTask(n))
-        catch { case e: Exception =>
-          logger.warn(s"skipping malformed ivm task ${n.path("id").asText("?")}: ${e.getMessage}")
-          None
-        }
-      },
-      decontamTasks = root.path("decontamTasks").elements.asScala.toSeq.flatMap { n =>
-        try Some(parseDecontamTask(n))
-        catch { case e: Exception =>
-          logger.warn(s"skipping malformed decontam task ${n.path("id").asText("?")}: ${e.getMessage}")
-          None
-        }
-      },
-      checksumTasks = root.path("checksumTasks").elements.asScala.toSeq.flatMap { n =>
-        try Some(parseChecksumTask(n))
-        catch { case e: Exception =>
-          logger.warn(s"skipping malformed checksum task ${n.path("id").asText("?")}: ${e.getMessage}")
-          None
-        }
-      },
-      annEvalTasks = root.path("annEvalTasks").elements.asScala.toSeq.flatMap { n =>
-        try Some(parseAnnEvalTask(n))
-        catch { case e: Exception =>
-          logger.warn(s"skipping malformed annEval task ${n.path("id").asText("?")}: ${e.getMessage}")
-          None
-        }
-      },
-      modelEvalTasks = root.path("modelEvalTasks").elements.asScala.toSeq.flatMap { n =>
-        try Some(parseModelEvalTask(n))
-        catch { case e: Exception =>
-          logger.warn(s"skipping malformed modelEval task ${n.path("id").asText("?")}: ${e.getMessage}")
-          None
-        }
-      },
-      privacyTasks = root.path("privacyTasks").elements.asScala.toSeq.flatMap { n =>
-        try Some(parsePrivacyTask(n))
-        catch { case e: Exception =>
-          logger.warn(s"skipping malformed privacy task ${n.path("id").asText("?")}: ${e.getMessage}")
-          None
-        }
-      },
-      graphTasks = root.path("graphTasks").elements.asScala.toSeq.flatMap { n =>
-        try Some(parseGraphTask(n))
-        catch { case e: Exception =>
-          logger.warn(s"skipping malformed graph task ${n.path("id").asText("?")}: ${e.getMessage}")
-          None
-        }
-      },
-      retrainTasks = root.path("retrainTasks").elements.asScala.toSeq.flatMap { n =>
-        try Some(parseRetrainTask(n))
-        catch { case e: Exception =>
-          logger.warn(s"skipping malformed retrain task ${n.path("id").asText("?")}: ${e.getMessage}")
-          None
-        }
-      },
-      driftTasks = root.path("driftTasks").elements.asScala.toSeq.flatMap { n =>
-        try Some(parseDriftTask(n))
-        catch { case e: Exception =>
-          logger.warn(s"skipping malformed drift task ${n.path("id").asText("?")}: ${e.getMessage}")
-          None
-        }
-      },
-      graphHealthTasks =
-        root.path("graphHealthTasks").elements.asScala.toSeq.flatMap { n =>
-          try Some(parseGraphHealthTask(n))
-          catch { case e: Exception =>
-            logger.warn(s"skipping malformed graph health task ${n.path("id").asText("?")}: ${e.getMessage}")
-            None
-          }
-        },
-      erTasks = root.path("erTasks").elements.asScala.toSeq.flatMap { n =>
-        try Some(parseErTask(n))
-        catch { case e: Exception =>
-          logger.warn(s"skipping malformed er task ${n.path("id").asText("?")}: ${e.getMessage}")
-          None
-        }
-      },
+      syncTasks = entries(root, "syncTasks", "sync")(parseSyncTask),
+      decontamTasks = entries(root, "decontamTasks", "decontam")(parseDecontamTask),
+      ivmTasks = entries(root, "ivmTasks", "ivm")(parseIvmTask),
+      scheduled = Scheduled.Families.flatMap(f => entries(root, f.configKey, f.warnName)(f.task)),
       metricsDir = optText(root, "metricsDir"))
   }
 
-  private def parseErTask(n: JsonNode): graft.model.ErTaskSpec = {
-    val schedule = optText(n, "schedule").getOrElse("15 5 * * *")
-    graft.operators.Cron.parse(schedule)
-    graft.model.ErTaskSpec(
-      id = n.path("id").asInt(0),
-      schedule = schedule,
-      sourceDir = reqText(n, "sourceDir"),
-      storeDir = reqText(n, "storeDir"),
-      compact = n.path("compact").asBoolean(false))
-  }
+  /** Every entry of the `key` array that parses; a malformed one is
+    * skipped with a warning and its siblings still load. */
+  private def entries[A](root: JsonNode, key: String, what: String)(parse: JsonNode => A): Seq[A] =
+    root.path(key).elements.asScala.toSeq.flatMap { n =>
+      try Some(parse(n))
+      catch { case e: Exception =>
+        logger.warn(s"skipping malformed $what task ${n.path("id").asText("?")}: ${e.getMessage}")
+        None
+      }
+    }
 
-  private def reqText(n: JsonNode, field: String): String = {
+  private[engine] def reqText(n: JsonNode, field: String): String = {
     val v = n.path(field)
     require(v.isTextual && v.asText.nonEmpty, s"missing/empty '$field'")
     v.asText
   }
 
-  private def optText(n: JsonNode, field: String): Option[String] = {
+  private[engine] def optText(n: JsonNode, field: String): Option[String] = {
     val v = n.path(field)
     if (v.isTextual && v.asText.nonEmpty) Some(v.asText) else None
   }
@@ -326,77 +198,6 @@ object ConfigReader {
       })
   }
 
-  private def parseBackupTask(n: JsonNode): BackupSpec = {
-    val schedule = optText(n, "schedule").getOrElse("0 2 * * *")
-    graft.operators.Cron.parse(schedule) // validate here: a bad schedule skips THIS task only
-    BackupSpec(
-      id = n.path("id").asInt(0),
-      format = optText(n, "format").getOrElse("json"),
-      tables = n.path("tables").elements.asScala.toSeq.map { t =>
-        BackupTableSpec(
-          tablePattern = reqText(t, "tablePattern"),
-          fields = {
-            val fs = t.path("fields").elements.asScala.map(_.asText).toSeq
-            if (fs.isEmpty) Seq("all") else fs
-          },
-          timeField = optText(t, "timeField"),
-          startOffsetDays = t.path("startOffsetDays").asInt(-1),
-          endOffsetDays = t.path("endOffsetDays").asInt(-1))
-      },
-      compress = n.path("compress").asBoolean(true),
-      schedule = schedule,
-      sourceDir = reqText(n, "sourceDir"),
-      outDir = reqText(n, "outDir"),
-      // gcsAddress is the reference's field name for the upload
-      // destination (config.go:19); uploadDir wins when both appear
-      uploadDir = optText(n, "uploadDir").orElse(optText(n, "gcsAddress")))
-  }
-
-  private def parseTrainingTask(n: JsonNode): TrainingExportSpec = {
-    val schedule = optText(n, "schedule").getOrElse("0 3 * * *")
-    graft.operators.Cron.parse(schedule) // validate: a bad schedule skips THIS task only
-    val rates = {
-      val r = n.path("rates")
-      if (r.isObject)
-        r.fields.asScala.map { e =>
-          require(e.getValue.isNumber, s"rate for '${e.getKey}' must be numeric")
-          val v = e.getValue.asDouble
-          require(v >= 0, s"rate for '${e.getKey}' must be >= 0")
-          e.getKey -> v
-        }.toMap
-      else Map.empty[String, Double]
-    }
-    TrainingExportSpec(
-      id = n.path("id").asInt(0),
-      schedule = schedule,
-      sourceDir = reqText(n, "sourceDir"),
-      outDir = reqText(n, "outDir"),
-      minQuality = n.path("minQuality").asDouble(0.66),
-      capacity = {
-        val c = n.path("capacity").asInt(512)
-        require(c > 0, "capacity must be positive"); c
-      },
-      rates = rates)
-  }
-
-  private def parseOptimizeTask(n: JsonNode): OptimizeSpec = {
-    val schedule = optText(n, "schedule").getOrElse("0 4 * * *")
-    graft.operators.Cron.parse(schedule) // validate: a bad schedule skips THIS task only
-    val by = n.path("zorderBy")
-    require(by.isArray && by.size == 2 && by.get(0).isTextual && by.get(1).isTextual,
-      "zorderBy must be a two-column array")
-    OptimizeSpec(
-      id = n.path("id").asInt(0),
-      schedule = schedule,
-      sourceDir = reqText(n, "sourceDir"),
-      outDir = reqText(n, "outDir"),
-      zorderBy = (by.get(0).asText, by.get(1).asText),
-      numFiles = {
-        val f = n.path("numFiles").asInt(8)
-        require(f > 0, "numFiles must be positive"); f
-      })
-  }
-
   private val IvmAggTokens = Set("n_rows", "cents")
 
   private def parseIvmTask(n: JsonNode): graft.model.IvmTaskSpec = {
@@ -453,166 +254,5 @@ object ConfigReader {
     require(s.k >= 1 && s.minHits >= 1 && s.evalMod >= 2,
       s"decontam task ${s.id}: k/minHits must be >= 1, evalMod >= 2")
     s
-  }
-
-  private def parseAnnIndexTask(n: JsonNode): graft.model.AnnIndexSpec = {
-    val schedule = optText(n, "schedule").getOrElse("0 5 * * *")
-    graft.operators.Cron.parse(schedule) // validate: a bad schedule skips THIS task only
-    val spec = graft.model.AnnIndexSpec(
-      id = n.path("id").asInt(0),
-      schedule = schedule,
-      sourceDir = reqText(n, "sourceDir"),
-      indexDir = reqText(n, "indexDir"),
-      ivf = n.path("ivf").asBoolean(true),
-      codes = n.path("codes").asBoolean(true),
-      jl = n.path("jl").asBoolean(false),
-      trainPq = n.path("trainPq").asBoolean(false),
-      compact = n.path("compact").asBoolean(false))
-    require(spec.ivf || spec.codes || spec.jl || spec.trainPq,
-      "annIndex task maintains nothing: enable ivf, codes, jl, or trainPq")
-    spec
-  }
-
-  private def parseDqTask(n: JsonNode): DqSpec = {
-    import graft.operators.DataQuality._
-    val schedule = optText(n, "schedule").getOrElse("0 6 * * *")
-    graft.operators.Cron.parse(schedule) // validate: a bad schedule skips THIS task only
-    val rules = n.path("rules").elements.asScala.toSeq.map { r =>
-      val name = reqText(r, "name"); val column = reqText(r, "column")
-      reqText(r, "kind") match {
-        case "notNull"  => NotNull(name, column)
-        case "unique"   => Unique(name, column)
-        case "minValue" =>
-          require(r.path("value").isNumber, s"rule '$name' needs a numeric value")
-          MinValue(name, column, r.path("value").asDouble)
-        case "maxValue" =>
-          require(r.path("value").isNumber, s"rule '$name' needs a numeric value")
-          MaxValue(name, column, r.path("value").asDouble)
-        case "inSet" =>
-          val vs = r.path("values")
-          require(vs.isArray && vs.size > 0, s"rule '$name' needs a values array")
-          InSet(name, column, vs.elements.asScala.toSeq.map(_.asText))
-        case k => throw new IllegalArgumentException(s"unknown rule kind '$k'")
-      }
-    }
-    require(rules.nonEmpty, "dq task needs at least one rule")
-    DqSpec(
-      id = n.path("id").asInt(0),
-      schedule = schedule,
-      sourceDir = reqText(n, "sourceDir"),
-      table = reqText(n, "table"),
-      rules = rules)
-  }
-
-  private def parseChecksumTask(n: JsonNode): ChecksumSpec = {
-    val schedule = optText(n, "schedule").getOrElse("30 5 * * *")
-    graft.operators.Cron.parse(schedule)
-    ChecksumSpec(
-      id = n.path("id").asInt(0),
-      schedule = schedule,
-      sourceDir = reqText(n, "sourceDir"),
-      targetDir = reqText(n, "targetDir"))
-  }
-
-  private def parseAnnEvalTask(n: JsonNode): AnnEvalSpec = {
-    val schedule = optText(n, "schedule").getOrElse("45 4 * * *")
-    graft.operators.Cron.parse(schedule)
-    AnnEvalSpec(
-      id = n.path("id").asInt(0),
-      schedule = schedule,
-      sourceDir = reqText(n, "sourceDir"),
-      indexDir = reqText(n, "indexDir"),
-      k = n.path("k").asInt(5),
-      nprobe = n.path("nprobe").asInt(4),
-      minRecallMicro = n.path("minRecallMicro").asLong(800000L))
-  }
-
-  private def parseModelEvalTask(n: JsonNode): ModelEvalSpec = {
-    val schedule = optText(n, "schedule").getOrElse("55 4 * * *")
-    graft.operators.Cron.parse(schedule)
-    ModelEvalSpec(
-      id = n.path("id").asInt(0),
-      schedule = schedule,
-      sourceDir = reqText(n, "sourceDir"),
-      minKappaMicro = n.path("minKappaMicro").asLong(200000L),
-      minAucMicro = n.path("minAucMicro").asLong(700000L),
-      maxEceMicro = n.path("maxEceMicro").asLong(150000L))
-  }
-
-  private def parsePrivacyTask(n: JsonNode): PrivacySpec = {
-    val schedule = optText(n, "schedule").getOrElse("10 6 * * *")
-    graft.operators.Cron.parse(schedule)
-    val qis = n.path("quasiIds").elements.asScala.map(_.asText).toSeq
-    val spec = PrivacySpec(
-      id = n.path("id").asInt(0),
-      schedule = schedule,
-      sourceDir = reqText(n, "sourceDir"),
-      table = optText(n, "table").getOrElse("customer"),
-      quasiIds = if (qis.nonEmpty) qis else Seq("c_nationkey", "c_mktsegment"),
-      sensitive = optText(n, "sensitive").getOrElse("c_acctbal"),
-      bandWidth = n.path("bandWidth").asLong(1000L),
-      minK = n.path("minK").asLong(5L),
-      minL = n.path("minL").asLong(2L),
-      maxEmdMicro = n.path("maxEmdMicro").asLong(200000L))
-    require(!spec.quasiIds.contains(spec.sensitive),
-      "privacy task: the sensitive column cannot also be a quasi-identifier")
-    spec
-  }
-
-  private def parseGraphTask(n: JsonNode): GraphTaskSpec = {
-    val schedule = optText(n, "schedule").getOrElse("20 5 * * *")
-    graft.operators.Cron.parse(schedule)
-    GraphTaskSpec(
-      id = n.path("id").asInt(0),
-      schedule = schedule,
-      sourceDir = reqText(n, "sourceDir"),
-      storeDir = reqText(n, "storeDir"),
-      compact = n.path("compact").asBoolean(false))
-  }
-
-  private def parseRetrainTask(n: JsonNode): RetrainSpec = {
-    val schedule = optText(n, "schedule").getOrElse("40 3 * * *")
-    graft.operators.Cron.parse(schedule)
-    val spec = RetrainSpec(
-      id = n.path("id").asInt(0),
-      schedule = schedule,
-      sourceDir = reqText(n, "sourceDir"),
-      storeDir = reqText(n, "storeDir"),
-      iters = n.path("iters").asInt(20),
-      lr = n.path("lr").asLong(16L),
-      minGainMicro = n.path("minGainMicro").asLong(5000L))
-    require(spec.iters > 0 && spec.lr > 0, "retrain task: iters/lr must be positive")
-    require(spec.minGainMicro >= 0, "retrain task: minGainMicro must be non-negative")
-    spec
-  }
-
-  private def parseGraphHealthTask(n: JsonNode): GraphHealthSpec = {
-    val schedule = optText(n, "schedule").getOrElse("45 6 * * *")
-    graft.operators.Cron.parse(schedule)
-    val spec = GraphHealthSpec(
-      id = n.path("id").asInt(0),
-      schedule = schedule,
-      sourceDir = reqText(n, "sourceDir"),
-      iters = n.path("iters").asInt(4),
-      minQMicro = n.path("minQMicro").asLong(100000L),
-      epochs = n.path("epochs").asInt(4),
-      maxDriftMicro = n.path("maxDriftMicro").asLong(Long.MaxValue),
-      storeDir = optText(n, "storeDir").getOrElse(""))
-    require(spec.iters > 0, "graph health task: iters must be positive")
-    require(spec.epochs >= 2, "graph health task: epochs must be >= 2")
-    spec
-  }
-
-  private def parseDriftTask(n: JsonNode): DriftSpec = {
-    val schedule = optText(n, "schedule").getOrElse("25 6 * * *")
-    graft.operators.Cron.parse(schedule)
-    val spec = DriftSpec(
-      id = n.path("id").asInt(0),
-      schedule = schedule,
-      sourceDir = reqText(n, "sourceDir"),
-      bucketWidth = n.path("bucketWidth").asDouble(5.0),
-      maxTvdMicro = n.path("maxTvdMicro").asLong(200000L))
-    require(spec.bucketWidth > 0, "drift task: bucketWidth must be positive")
-    spec
   }
 }

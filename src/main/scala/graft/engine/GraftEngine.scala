@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.functions.TimeWindows
+import graft.functions.{Security, TimeWindows}
 import graft.model.{BackupSpec, TrainingExportSpec}
 import graft.operators.{Backup, Cron, Upsert}
 import graft.streaming.{Alerts, CdcPipeline, ControlLoop, DailyRollup, Dlq, Guardian, KvPipeline, Metrics, RateStream, SessionStream}
@@ -18,8 +18,9 @@ import graft.streaming.{Alerts, CdcPipeline, ControlLoop, DailyRollup, Dlq, Guar
   * config, compile every enabled task to per-table pipeline defs
   * ([[Compiler]]), and reconcile the running set per pipeline
   * ([[ControlLoop.Supervisor]] — only added/changed/dead pipelines
-  * restart; checkpoints make each swap lossless). Backup tasks compile
-  * to [[Cron]] jobs fired by [[tickCron]] (cronjob.go:100-192), and
+  * restart; checkpoints make each swap lossless). Scheduled tasks (the
+  * [[Scheduled]] registry) compile to [[Cron]] jobs fired by
+  * [[tickCron]] (cronjob.go:100-192), and
   * [[retryDlq]] sweeps every CDC pipeline's dead-letter queue, alerting
   * on parked batches (mongodb.go:1876-1969). [[Guardian]] wraps each
   * pipeline start (transient start failures back off and retry);
@@ -41,20 +42,7 @@ final class GraftEngine(
   private val supervisor = new ControlLoop.Supervisor[Compiler.PipelineDef](startPipeline)
   @volatile private var stopping = false
   @volatile private var pipelineDefs = Map.empty[String, Compiler.PipelineDef]
-  @volatile private var backupSpecs: Seq[BackupSpec] = Nil
-  @volatile private var trainingSpecs: Seq[TrainingExportSpec] = Nil
-  @volatile private var optimizeSpecs: Seq[graft.model.OptimizeSpec] = Nil
-  @volatile private var dqSpecs: Seq[graft.model.DqSpec] = Nil
-  @volatile private var annIndexSpecs: Seq[graft.model.AnnIndexSpec] = Nil
-  @volatile private var checksumSpecs: Seq[graft.model.ChecksumSpec] = Nil
-  @volatile private var annEvalSpecs: Seq[graft.model.AnnEvalSpec] = Nil
-  @volatile private var modelEvalSpecs: Seq[graft.model.ModelEvalSpec] = Nil
-  @volatile private var retrainSpecs: Seq[graft.model.RetrainSpec] = Nil
-  @volatile private var driftSpecs: Seq[graft.model.DriftSpec] = Nil
-  @volatile private var graphHealthSpecs: Seq[graft.model.GraphHealthSpec] = Nil
-  @volatile private var erSpecs: Seq[graft.model.ErTaskSpec] = Nil
-  @volatile private var privacySpecs: Seq[graft.model.PrivacySpec] = Nil
-  @volatile private var graphSpecs: Seq[graft.model.GraphTaskSpec] = Nil
+  @volatile private var scheduled: Seq[Scheduled.Task[_]] = Nil
   @volatile private var scheduler = new Cron.Scheduler(Nil)
   @volatile private var recorder: Option[(String, Metrics.Recorder)] = None
 
@@ -96,7 +84,11 @@ final class GraftEngine(
       snapshotDir.foreach { dir =>
         val p = new org.apache.hadoop.fs.Path(dir)
         if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) {
-          val snap = spark.read.parquet(dir)
+          // snapshot rows are flat after-images: the stream's field
+          // rules apply to them with the `after.` prefix stripped, so a
+          // masked column lands masked (and string-typed) from row one
+          val snap = Security.applyFieldSecurity(spark.read.parquet(dir),
+            cfg.fieldSecurity.map(r => r.copy(field = r.field.stripPrefix("after."))))
           // BOTH recency columns, null: snapshot rows lose to any real
           // change event, and every bucket carries the same schema —
           // a snapshot-only footer must never make a later target read
@@ -170,7 +162,7 @@ final class GraftEngine(
   }
 
   /** One reload tick (main.go:92-145): parse config, rebuild the cron
-    * schedule if the backup set changed (an unchanged reload must keep
+    * schedule if the scheduled set changed (an unchanged reload must keep
     * the fired-this-minute dedup state), reconcile pipelines.
     *
     * A config file that fails to LOAD (unreadable / syntactically
@@ -211,226 +203,19 @@ final class GraftEngine(
       }
     }
     recorder.foreach(_._2.flush())
-    if (cfg.backupTasks != backupSpecs || cfg.trainingTasks != trainingSpecs ||
-        cfg.optimizeTasks != optimizeSpecs || cfg.dqTasks != dqSpecs ||
-        cfg.annIndexTasks != annIndexSpecs || cfg.checksumTasks != checksumSpecs ||
-        cfg.annEvalTasks != annEvalSpecs || cfg.modelEvalTasks != modelEvalSpecs ||
-        cfg.privacyTasks != privacySpecs || cfg.graphTasks != graphSpecs ||
-        cfg.retrainTasks != retrainSpecs || cfg.driftTasks != driftSpecs ||
-        cfg.graphHealthTasks != graphHealthSpecs || cfg.erTasks != erSpecs) {
-      backupSpecs = cfg.backupTasks
-      trainingSpecs = cfg.trainingTasks
-      optimizeSpecs = cfg.optimizeTasks
-      dqSpecs = cfg.dqTasks
-      annIndexSpecs = cfg.annIndexTasks
-      checksumSpecs = cfg.checksumTasks
-      annEvalSpecs = cfg.annEvalTasks
-      modelEvalSpecs = cfg.modelEvalTasks
-      privacySpecs = cfg.privacyTasks
-      graphSpecs = cfg.graphTasks
-      retrainSpecs = cfg.retrainTasks
-      driftSpecs = cfg.driftTasks
-      graphHealthSpecs = cfg.graphHealthTasks
-      erSpecs = cfg.erTasks
+    if (cfg.scheduled != scheduled) {
+      scheduled = cfg.scheduled
       // carry the fired-this-minute state forward: a config edit landing
       // during a job's fire minute must not double-run surviving jobs
-      scheduler = new Cron.Scheduler(
-        backupSpecs.map(toJob) ++ trainingSpecs.map(toTrainingJob) ++
-          optimizeSpecs.map(toOptimizeJob) ++ dqSpecs.map(toDqJob) ++
-          annIndexSpecs.map(toAnnIndexJob) ++ checksumSpecs.map(toChecksumJob) ++
-          annEvalSpecs.map(toAnnEvalJob) ++ modelEvalSpecs.map(toModelEvalJob) ++
-          privacySpecs.map(toPrivacyJob) ++ graphSpecs.map(toGraphJob) ++
-          retrainSpecs.map(toRetrainJob) ++ driftSpecs.map(toDriftJob) ++
-          graphHealthSpecs.map(toGraphHealthJob) ++ erSpecs.map(toErJob),
+      scheduler = new Cron.Scheduler(scheduled.map(_.job(spark, alerts, clock)),
         scheduler.firedState)
     }
     pipelineDefs = defs
     supervisor.reconcile(pipelineDefs)
   }
 
-  private def toJob(spec: BackupSpec): Cron.Job =
-    Cron.Job(spec.id, spec.schedule, () =>
-      // a failing export alerts and yields the tick — it must not abort
-      // the scheduler pass for the other due jobs
-      try { GraftEngine.runBackup(spark, spec, clock()); () }
-      catch { case e: Exception =>
-        alerts.send(Alerts.Alert("backup_failed", s"backup${spec.id}",
-          String.valueOf(e.getMessage)))
-      })
-
-  private def toTrainingJob(spec: TrainingExportSpec): Cron.Job =
-    // id-offset into its own namespace: the scheduler's at-most-once
-    // dedup state is keyed by job id, and a backup task and a training
-    // task that share a numeric id must not share dedup entries
-    Cron.Job(GraftEngine.TrainingJobIdOffset + spec.id, spec.schedule, () =>
-      try { GraftEngine.runTrainingExport(spark, spec); () }
-      catch { case e: Exception =>
-        alerts.send(Alerts.Alert("training_export_failed", s"training${spec.id}",
-          String.valueOf(e.getMessage)))
-      })
-
-  private def toOptimizeJob(spec: graft.model.OptimizeSpec): Cron.Job =
-    Cron.Job(GraftEngine.OptimizeJobIdOffset + spec.id, spec.schedule, () =>
-      try { GraftEngine.runOptimize(spark, spec); () }
-      catch { case e: Exception =>
-        alerts.send(Alerts.Alert("optimize_failed", s"optimize${spec.id}",
-          String.valueOf(e.getMessage)))
-      })
-
-  private def toAnnIndexJob(spec: graft.model.AnnIndexSpec): Cron.Job =
-    Cron.Job(GraftEngine.AnnIndexJobIdOffset + spec.id, spec.schedule, () =>
-      try { GraftEngine.runAnnIndexMaintenance(spark, spec); () }
-      catch { case e: Exception =>
-        alerts.send(Alerts.Alert("ann_index_failed", s"annIndex${spec.id}",
-          String.valueOf(e.getMessage)))
-      })
-
-  private def toAnnEvalJob(spec: graft.model.AnnEvalSpec): Cron.Job =
-    Cron.Job(GraftEngine.AnnEvalJobIdOffset + spec.id, spec.schedule, () =>
-      try {
-        val recall = GraftEngine.runAnnEval(spark, spec)
-        if (recall < spec.minRecallMicro)
-          alerts.send(Alerts.Alert("ann_recall_low", s"annEval${spec.id}",
-            s"mean recall ${recall}u < bound ${spec.minRecallMicro}u"))
-      }
-      catch { case e: Exception =>
-        alerts.send(Alerts.Alert("ann_eval_failed", s"annEval${spec.id}",
-          String.valueOf(e.getMessage)))
-      })
-
-  private def toModelEvalJob(spec: graft.model.ModelEvalSpec): Cron.Job =
-    Cron.Job(GraftEngine.ModelEvalJobIdOffset + spec.id, spec.schedule, () =>
-      try {
-        val m = GraftEngine.runModelEval(spark, spec)
-        m.kappaMicro.filter(_ < spec.minKappaMicro).foreach(k =>
-          alerts.send(Alerts.Alert("model_agreement_low", s"modelEval${spec.id}",
-            s"kappa ${k}u < bound ${spec.minKappaMicro}u")))
-        m.aucMicro.filter(_ < spec.minAucMicro).foreach(a =>
-          alerts.send(Alerts.Alert("model_auc_low", s"modelEval${spec.id}",
-            s"auc ${a}u < bound ${spec.minAucMicro}u")))
-        if (m.eceMicro > spec.maxEceMicro)
-          alerts.send(Alerts.Alert("model_calibration_off", s"modelEval${spec.id}",
-            s"ece ${m.eceMicro}u > bound ${spec.maxEceMicro}u"))
-      }
-      catch { case e: Exception =>
-        alerts.send(Alerts.Alert("model_eval_failed", s"modelEval${spec.id}",
-          String.valueOf(e.getMessage)))
-      })
-
-  private def toPrivacyJob(spec: graft.model.PrivacySpec): Cron.Job =
-    Cron.Job(GraftEngine.PrivacyJobIdOffset + spec.id, spec.schedule, () =>
-      try {
-        val a = GraftEngine.runPrivacyAudit(spark, spec)
-        if (a.minGroupSize < spec.minK)
-          alerts.send(Alerts.Alert("privacy_k_low", s"privacy${spec.id}/${spec.table}",
-            s"smallest QI group ${a.minGroupSize} < k=${spec.minK}"))
-        if (a.minLValue < spec.minL)
-          alerts.send(Alerts.Alert("privacy_l_low", s"privacy${spec.id}/${spec.table}",
-            s"least-diverse QI group l=${a.minLValue} < l=${spec.minL}"))
-        if (a.maxEmdMicro > spec.maxEmdMicro)
-          alerts.send(Alerts.Alert("privacy_t_distance_high",
-            s"privacy${spec.id}/${spec.table}",
-            s"furthest QI group EMD ${a.maxEmdMicro}u > t=${spec.maxEmdMicro}u"))
-      }
-      catch { case e: Exception =>
-        alerts.send(Alerts.Alert("privacy_audit_failed", s"privacy${spec.id}",
-          String.valueOf(e.getMessage)))
-      })
-
-  private def toGraphJob(spec: graft.model.GraphTaskSpec): Cron.Job =
-    Cron.Job(GraftEngine.GraphJobIdOffset + spec.id, spec.schedule, () =>
-      try { GraftEngine.runGraphMaintenance(spark, spec); () }
-      catch { case e: Exception =>
-        alerts.send(Alerts.Alert("graph_maintenance_failed", s"graph${spec.id}",
-          String.valueOf(e.getMessage)))
-      })
-
-  private def toDriftJob(spec: graft.model.DriftSpec): Cron.Job =
-    Cron.Job(GraftEngine.DriftJobIdOffset + spec.id, spec.schedule, () =>
-      try GraftEngine.runDriftAudit(spark, spec).foreach {
-        case (eventType, tvd) =>
-          alerts.send(Alerts.Alert("value_drift_high",
-            s"drift${spec.id}/$eventType",
-            s"TVD ${tvd}u > bound ${spec.maxTvdMicro}u"))
-      }
-      catch { case e: Exception =>
-        alerts.send(Alerts.Alert("drift_audit_failed", s"drift${spec.id}",
-          String.valueOf(e.getMessage)))
-      })
-
-  private def toGraphHealthJob(spec: graft.model.GraphHealthSpec): Cron.Job =
-    Cron.Job(GraftEngine.GraphHealthJobIdOffset + spec.id, spec.schedule, () =>
-      try {
-        GraftEngine.runGraphHealth(spark, spec).foreach { h =>
-          if (h.qMicro < spec.minQMicro)
-            alerts.send(Alerts.Alert("graph_modularity_low",
-              s"graphHealth${spec.id}",
-              s"Q ${h.qMicro}u < bound ${spec.minQMicro}u over " +
-                s"${h.nCommunities} communities"))
-        }
-        // drift watch (q298, opt-in): a structure that DECAYS epoch
-        // over epoch pages even while absolute Q still clears the bar
-        if (spec.maxDriftMicro != Long.MaxValue)
-          GraftEngine.runGraphEvolution(spark, spec).foreach {
-            case (epoch, drop) =>
-              alerts.send(Alerts.Alert("graph_modularity_drift",
-                s"graphHealth${spec.id}",
-                s"epoch $epoch dropped ${drop}u > bound " +
-                  s"${spec.maxDriftMicro}u"))
-          }
-      }
-      catch { case e: Exception =>
-        alerts.send(Alerts.Alert("graph_health_failed",
-          s"graphHealth${spec.id}", String.valueOf(e.getMessage)))
-      })
-
-  private def toErJob(spec: graft.model.ErTaskSpec): Cron.Job =
-    Cron.Job(GraftEngine.ErJobIdOffset + spec.id, spec.schedule, () =>
-      try { GraftEngine.runErMaintenance(spark, spec); () }
-      catch { case e: Exception =>
-        alerts.send(Alerts.Alert("er_maintenance_failed", s"er${spec.id}",
-          String.valueOf(e.getMessage)))
-      })
-
-  private def toRetrainJob(spec: graft.model.RetrainSpec): Cron.Job =
-    Cron.Job(GraftEngine.RetrainJobIdOffset + spec.id, spec.schedule, () =>
-      try {
-        val r = GraftEngine.runModelRetrain(spark, spec)
-        if (r.promoted)
-          alerts.send(Alerts.Alert("model_promoted", s"retrain${spec.id}",
-            s"candidate AUC ${r.candidateAucMicro}u replaces " +
-              r.incumbentAucMicro.fold("(founding)")(a => s"${a}u")))
-      }
-      catch { case e: Exception =>
-        alerts.send(Alerts.Alert("model_retrain_failed", s"retrain${spec.id}",
-          String.valueOf(e.getMessage)))
-      })
-
-  private def toChecksumJob(spec: graft.model.ChecksumSpec): Cron.Job =
-    Cron.Job(GraftEngine.ChecksumJobIdOffset + spec.id, spec.schedule, () =>
-      try GraftEngine.runChecksumCompare(spark, spec).foreach {
-        case (month, src, tgt) =>
-          alerts.send(Alerts.Alert("checksum_mismatch", s"checksum${spec.id}",
-            s"month $month: source $src != target $tgt"))
-      }
-      catch { case e: Exception =>
-        alerts.send(Alerts.Alert("checksum_failed", s"checksum${spec.id}",
-          String.valueOf(e.getMessage)))
-      })
-
-  private def toDqJob(spec: graft.model.DqSpec): Cron.Job =
-    Cron.Job(GraftEngine.DqJobIdOffset + spec.id, spec.schedule, () =>
-      try GraftEngine.runDqCheck(spark, spec).foreach { case (rule, n) =>
-        alerts.send(Alerts.Alert("dq_violation", s"dq${spec.id}/${spec.table}",
-          s"rule $rule: $n violations"))
-      }
-      catch { case e: Exception =>
-        alerts.send(Alerts.Alert("dq_failed", s"dq${spec.id}",
-          String.valueOf(e.getMessage)))
-      })
-
-  /** Minute tick for scheduled backups; returns fired job ids. */
-  def tickCron(now: LocalDateTime = clock()): Seq[Int] = scheduler.tick(now)
+  /** Minute tick for the scheduled tasks; returns the fired job keys. */
+  def tickCron(now: LocalDateTime = clock()): Seq[String] = scheduler.tick(now)
 
   // --- incremental count monitoring ----------------------------------
   // The reference re-issues a full COUNT(*) per table per monitor tick
@@ -781,25 +566,6 @@ object GraftEngine {
     java.sql.DriverManager.setLoginTimeout(JdbcConnectBoundSecs)
   private[engine] def ensureJdbcConnectBound(): Unit = jdbcBoundOnce
 
-  /** Training-task job ids live [[TrainingJobIdOffset]] above backup ids
-    * so the two task families never share scheduler-dedup keys. */
-  val TrainingJobIdOffset = 1000000
-
-  /** Optimize-task namespace, above training's for the same reason. */
-  val OptimizeJobIdOffset = 2000000
-
-  /** DQ-task namespace. */
-  val DqJobIdOffset = 3000000
-
-  /** ANN-index-maintenance namespace. */
-  val AnnIndexJobIdOffset = 4000000
-
-  /** Checksum-reconciliation namespace. */
-  val ChecksumJobIdOffset = 5000000
-
-  /** ANN-eval watchdog namespace. */
-  val AnnEvalJobIdOffset = 6000000
-
   /** Run one ANN index-quality eval now: mean recall@k (integer micro)
     * of the stored index's probes for the standard query set
     * (vec_id < 10) against exact-cosine truth over the corpus of
@@ -835,8 +601,6 @@ object GraftEngine {
     else (sys & truth).size.toLong * 1000000L / truth.size
   }
 
-  val ModelEvalJobIdOffset = 7000000
-
   /** One model-eval sweep's scalars; kappa/AUC are None on degenerate
     * corpora (one label class), ECE always folds. */
   final case class ModelEvalResult(kappaMicro: Option[Long],
@@ -859,20 +623,6 @@ object GraftEngine {
     val ece = if (n == 0) 0L else bins.map { case (nd, g) => nd * g }.sum / n
     ModelEvalResult(kappa, auc, ece)
   }
-
-  val PrivacyJobIdOffset = 8000000
-
-  /** Model-lifecycle namespace. */
-  val RetrainJobIdOffset = 10000000
-
-  /** Drift-watchdog namespace. */
-  val DriftJobIdOffset = 11000000
-
-  /** Graph-health-watchdog namespace. */
-  val GraphHealthJobIdOffset = 12000000
-
-  /** ER-store maintenance ids live in their own namespace. */
-  val ErJobIdOffset = 13000000
 
   /** One graph-health readout: the partition's global Newman
     * modularity in micro (Σ of the q267 per-community contributions —
@@ -1026,9 +776,6 @@ object GraftEngine {
       }
     } finally graft.operators.PlanCache.release()
   }
-
-  /** Graph-store maintenance namespace. */
-  val GraphJobIdOffset = 9000000
 
   /** Run one graph-store maintenance pass now: reconcile the edge
     * store against the orders of record (O(increment) — the basket

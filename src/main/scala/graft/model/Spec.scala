@@ -79,7 +79,6 @@ final case class SyncTaskSpec(
   * column. */
 final case class ErTaskSpec(
     id: Int,
-    schedule: String = "15 5 * * *",
     sourceDir: String = "",   // table root holding `customer`
     storeDir: String = "",    // entity store root
     compact: Boolean = false)
@@ -92,12 +91,14 @@ final case class BackupTableSpec(
     startOffsetDays: Int = -1, // JST day offsets (time_utils.go:12-16)
     endOffsetDays: Int = -1)
 
+/** One backup task. Like every scheduled family's spec it holds no cron
+  * schedule: the schedule and its default live with the family's row in
+  * [[graft.engine.Scheduled]]. */
 final case class BackupSpec(
     id: Int,
     format: String,            // json | csv | sql
     tables: Seq[BackupTableSpec],
     compress: Boolean = true,
-    schedule: String = "0 2 * * *", // five-field cron (cronjob.go:100-192)
     sourceDir: String = "",         // table root the export scans
     outDir: String = "",            // artifact root
     uploadDir: Option[String] = None) // zip + store destination (≙ gcsAddress)
@@ -109,7 +110,6 @@ final case class BackupSpec(
   * the operator's default mix. */
 final case class TrainingExportSpec(
     id: Int,
-    schedule: String = "0 3 * * *",
     sourceDir: String = "",    // corpus root (documents.parquet inside)
     outDir: String = "",       // manifest root
     minQuality: Double = 0.66,
@@ -124,7 +124,6 @@ final case class TrainingExportSpec(
   * filtered scan saves afterwards. */
 final case class OptimizeSpec(
     id: Int,
-    schedule: String = "0 4 * * *",
     sourceDir: String = "",    // input parquet table (file or dir)
     outDir: String = "",       // optimized mirror
     zorderBy: (String, String) = ("", ""),
@@ -137,7 +136,6 @@ final case class OptimizeSpec(
   * out of contract pages someone before a consumer reads it). */
 final case class DqSpec(
     id: Int,
-    schedule: String = "0 6 * * *",
     sourceDir: String = "",
     table: String = "",
     rules: Seq[graft.operators.DataQuality.Rule] = Nil)
@@ -150,7 +148,6 @@ final case class DqSpec(
   * moving a row between stores. */
 final case class ChecksumSpec(
     id: Int,
-    schedule: String = "30 5 * * *",
     sourceDir: String = "",
     targetDir: String = "")
 
@@ -162,7 +159,6 @@ final case class ChecksumSpec(
   * that says re-found/retrain before consumers notice). */
 final case class AnnEvalSpec(
     id: Int,
-    schedule: String = "45 4 * * *",
     sourceDir: String = "",     // corpus of record (embeddings table)
     indexDir: String = "",      // stored IVF root
     k: Int = 5,
@@ -180,7 +176,6 @@ final case class AnnEvalSpec(
   * micro scalars from bounded frames (1-row, 1-row, ≤10 bins). */
 final case class ModelEvalSpec(
     id: Int,
-    schedule: String = "55 4 * * *",
     sourceDir: String = "",     // documents corpus root
     minKappaMicro: Long = 200000L,
     minAucMicro: Long = 700000L,
@@ -194,7 +189,6 @@ final case class ModelEvalSpec(
   * physically erasing right-to-be-forgotten tombstones). */
 final case class GraphTaskSpec(
     id: Int,
-    schedule: String = "20 5 * * *",
     sourceDir: String = "",   // orders-of-record root (lineitem table)
     storeDir: String = "",    // graph store root (edges/ + baskets/)
     compact: Boolean = false)
@@ -211,7 +205,6 @@ final case class GraphTaskSpec(
   * (the drift family's empty-source discipline). */
 final case class GraphHealthSpec(
     id: Int,
-    schedule: String = "45 6 * * *",
     sourceDir: String = "",
     iters: Int = 4,
     minQMicro: Long = 100000L,
@@ -234,7 +227,6 @@ final case class GraphHealthSpec(
   * distribution silently misclassify under this month's. */
 final case class DriftSpec(
     id: Int,
-    schedule: String = "25 6 * * *",
     sourceDir: String = "",
     bucketWidth: Double = 5.0,
     maxTvdMicro: Long = 200000L)
@@ -250,7 +242,6 @@ final case class DriftSpec(
   * unconditionally (there is no incumbent to hold for). */
 final case class RetrainSpec(
     id: Int,
-    schedule: String = "40 3 * * *",
     sourceDir: String = "",   // documents corpus root
     storeDir: String = "",    // model registry root
     iters: Int = 20,
@@ -272,7 +263,6 @@ final case class RetrainSpec(
   * profile operators leave to the caller). */
 final case class PrivacySpec(
     id: Int,
-    schedule: String = "10 6 * * *",
     sourceDir: String = "",
     table: String = "customer",
     quasiIds: Seq[String] = Seq("c_nationkey", "c_mktsegment"),
@@ -295,7 +285,6 @@ final case class PrivacySpec(
   * other's tombstones. */
 final case class AnnIndexSpec(
     id: Int,
-    schedule: String = "0 5 * * *",
     sourceDir: String = "",    // embeddings corpus root
     indexDir: String = "",     // index root (ivf/ and codes/ beneath)
     ivf: Boolean = true,

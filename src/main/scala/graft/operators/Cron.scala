@@ -62,8 +62,9 @@ object Cron {
   }
 
   /** A schedulable job: the engine-side stand-in for one BackupTask row
-    * (cronjob.go:107-125) — `run` executes the backup export. */
-  final case class Job(id: Int, schedule: String, run: () => Unit) {
+    * (cronjob.go:107-125) — `run` executes the task. `id` is the
+    * scheduler's dedup key. */
+  final case class Job(id: String, schedule: String, run: () => Unit) {
     val expr: CronExpr = parse(schedule)
   }
 
@@ -76,10 +77,10 @@ object Cron {
     * a job's fire minute must not double-run jobs that survived the
     * edit — the at-most-once contract spans rebuilds, keyed by job id. */
   final class Scheduler(jobs: Seq[Job],
-      previousFired: Map[Int, LocalDateTime] = Map.empty) {
+      previousFired: Map[String, LocalDateTime] = Map.empty) {
     private var lastFired = previousFired
 
-    def tick(now: LocalDateTime): Seq[Int] = synchronized {
+    def tick(now: LocalDateTime): Seq[String] = synchronized {
       val minute = now.withSecond(0).withNano(0)
       val due = jobs.filter { j =>
         isDue(j.expr, minute) && !lastFired.get(j.id).contains(minute)
@@ -90,6 +91,6 @@ object Cron {
 
     /** Current fired-this-minute dedup state, for carry-forward into a
       * rebuilt scheduler. */
-    def firedState: Map[Int, LocalDateTime] = synchronized(lastFired)
+    def firedState: Map[String, LocalDateTime] = synchronized(lastFired)
   }
 }

@@ -28,7 +28,12 @@ object Par {
     else {
       val pool = Executors.newFixedThreadPool(math.min(width, items.size))
       implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      try Await.result(Future.sequence(items.map(a => Future(f(a)))), Duration.Inf)
-      finally pool.shutdown()
+      // a thrown item fails the whole map: shutdownNow drops the queued
+      // items instead of running work whose result is discarded
+      val out =
+        try Await.result(Future.sequence(items.map(a => Future(f(a)))), Duration.Inf)
+        catch { case e: Throwable => pool.shutdownNow(); throw e }
+      pool.shutdown()
+      out
     }
 }

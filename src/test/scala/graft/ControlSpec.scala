@@ -55,45 +55,45 @@ class ControlSpec extends SparkSpec {
   test("scheduler fires due jobs once per minute and re-fires next match") {
     var runs = Vector.empty[(Int, String)]
     val sched = new Cron.Scheduler(Seq(
-      Cron.Job(1, "*/5 * * * *", () => runs :+= ((1, "a"))),
-      Cron.Job(2, "10 * * * *", () => runs :+= ((2, "b")))))
+      Cron.Job("1", "*/5 * * * *", () => runs :+= ((1, "a"))),
+      Cron.Job("2", "10 * * * *", () => runs :+= ((2, "b")))))
 
-    assert(sched.tick(t("2024-03-01T08:05:00")) == Seq(1))
+    assert(sched.tick(t("2024-03-01T08:05:00")) == Seq("1"))
     assert(sched.tick(t("2024-03-01T08:05:30")) == Seq()) // same minute: no double fire
-    assert(sched.tick(t("2024-03-01T08:10:00")) == Seq(1, 2))
+    assert(sched.tick(t("2024-03-01T08:10:00")) == Seq("1", "2"))
     assert(sched.tick(t("2024-03-01T08:11:00")) == Seq())
     assert(runs == Vector((1, "a"), (1, "a"), (2, "b")))
   }
 
   test("rebuilt scheduler carries fired-state: no double run in the fire minute") {
     var runs = 0
-    def job(body: => Unit) = Cron.Job(1, "5 * * * *", () => body)
+    def job(body: => Unit) = Cron.Job("1", "5 * * * *", () => body)
     val first = new Cron.Scheduler(Seq(job { runs += 1 }))
-    assert(first.tick(t("2024-03-01T08:05:00")) == Seq(1) && runs == 1)
+    assert(first.tick(t("2024-03-01T08:05:00")) == Seq("1") && runs == 1)
 
     // a config edit lands DURING the fire minute: the schedule rebuilds
     // with the surviving job (same id) plus a new one — the survivor
     // must not re-run this minute; the new job fires if due
     var newRuns = 0
     val rebuilt = new Cron.Scheduler(
-      Seq(job { runs += 1 }, Cron.Job(2, "5 * * * *", () => newRuns += 1)),
+      Seq(job { runs += 1 }, Cron.Job("2", "5 * * * *", () => newRuns += 1)),
       first.firedState)
-    assert(rebuilt.tick(t("2024-03-01T08:05:30")) == Seq(2))
+    assert(rebuilt.tick(t("2024-03-01T08:05:30")) == Seq("2"))
     assert(runs == 1 && newRuns == 1)
     // next matching minute: both fire again
-    assert(rebuilt.tick(t("2024-03-01T09:05:00")) == Seq(1, 2))
+    assert(rebuilt.tick(t("2024-03-01T09:05:00")) == Seq("1", "2"))
     assert(runs == 2 && newRuns == 2)
   }
 
   test("a fired cron job executes a real backup export") {
     val out = tmp() + "/export"
-    val job = Cron.Job(7, "0 3 * * *", () =>
+    val job = Cron.Job("7", "0 3 * * *", () =>
       graft.operators.Backup.writeJsonl(
         graft.operators.Backup.prunedMergedExport(spark, sf), out, compress = false))
     val sched = new Cron.Scheduler(Seq(job))
     assert(sched.tick(t("2024-03-01T02:59:00")).isEmpty)
     assert(!Files.exists(java.nio.file.Paths.get(out)))
-    assert(sched.tick(t("2024-03-01T03:00:00")) == Seq(7))
+    assert(sched.tick(t("2024-03-01T03:00:00")) == Seq("7"))
     val exported = spark.read.json(out)
     assert(exported.count() ==
       graft.operators.Backup.prunedMergedExport(spark, sf).count())

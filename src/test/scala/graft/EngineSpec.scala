@@ -6,8 +6,8 @@ import java.time.LocalDateTime
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.engine.{Compiler, ConfigReader, GraftEngine}
-import graft.operators.{Backup, Cdc, KvStore}
+import graft.engine.{Compiler, ConfigReader, GraftEngine, Scheduled}
+import graft.operators.{Backup, Cdc, Cron, KvStore}
 import graft.streaming.{Alerts, ChangeEvents}
 
 /** The composed engine (round-6 #1): JSON config → compiled pipelines →
@@ -46,7 +46,7 @@ class EngineSpec extends SparkSpec {
 
     // task 2 (unknown type) skipped; task 11 (bad cron) skipped — fault isolation
     assert(cfg.syncTasks.map(_.id) == Seq(1, 3))
-    assert(cfg.backupTasks.map(_.id) == Seq(10))
+    assert(cfg.scheduled.map(_.key) == Seq("backup10"))
     val t1 = cfg.syncTasks.head
     assert(t1.dlqDir == "/t_dlq") // defaulted beside the target
     val m = t1.tables.head
@@ -219,7 +219,7 @@ class EngineSpec extends SparkSpec {
 
       // ---- scheduled backup: fires at its cron minute, SQL round-trips
       assert(engine.tickCron(LocalDateTime.parse("2024-03-01T02:59:00")).isEmpty)
-      assert(engine.tickCron(LocalDateTime.parse("2024-03-01T03:00:00")) == Seq(10))
+      assert(engine.tickCron(LocalDateTime.parse("2024-03-01T03:00:00")) == Seq("backup10"))
       val artifacts = Files.list(Paths.get(s"$root/bout")).toArray.map(_.toString)
       assert(artifacts.exists(_.endsWith(".sql")))
       // W8 composed: the artifact was zipped and put through the store
@@ -350,7 +350,8 @@ class EngineSpec extends SparkSpec {
     val aliased = ConfigReader.parse(
       """{ "backupTasks": [ { "id": 1, "sourceDir": "/b", "outDir": "/o",
         |  "gcsAddress": "/uploads", "tables": [] } ] }""".stripMargin)
-    assert(aliased.backupTasks.head.uploadDir.contains("/uploads"))
+    assert(aliased.scheduled.collect { case Scheduled.Task(_, _, _, b: graft.model.BackupSpec) => b }
+      .head.uploadDir.contains("/uploads"))
 
     val root = tmp()
     val url = "jdbc:derby:memory:graftix;create=true"
@@ -462,6 +463,44 @@ class EngineSpec extends SparkSpec {
       engine.processAllAvailable()
       assert(normCdc(spark.read.parquet(s"$root/tgt/events")) ==
         stream ++ Set((9001L, 1.0, 11L), (9002L, 2.0, 12L))) // 9009 NOT applied
+    } finally engine.stop()
+  }
+
+  test("snapshot rows pass the table's field-security rules; the next change batch merges with an empty DLQ") {
+    import spark.implicits._
+    val root = tmp()
+    val cfgPath = s"$root/engine.json"
+    // snapshot keys are disjoint from the stream's user_ids
+    Seq((9001L, 1.0, 11L), (9002L, 2.0, 12L)).toDF("key", "value", "k")
+      .write.parquet(s"$root/snap/events")
+    ChangeEvents.fromEvents(spark, sf).coalesce(1).write.mode("append").json(s"$root/src/events")
+    writeConfig(cfgPath, s"""{ "syncTasks": [
+      { "id": 6, "type": "mongodb", "enabled": true, "securityEnabled": true,
+        "sourceDir": "$root/src", "targetDir": "$root/tgt",
+        "checkpointDir": "$root/ckpt", "dlqDir": "$root/dlq", "snapshotDir": "$root/snap",
+        "tables": [ {"sourceTable": "events", "keyColumns": ["key"],
+          "fieldSecurity": [ {"field": "after.k", "securityType": "mask"} ]} ] } ] }""")
+    val engine = new GraftEngine(spark, cfgPath, availableNow = false)
+    def target = graft.operators.Upsert.liveRows(
+      graft.operators.Upsert.readTarget(spark, s"$root/tgt/events"))
+    try {
+      engine.pollOnce()
+      engine.processAllAvailable()
+      val snapRows = target.filter(col("key").isin(9001L, 9002L))
+      assert(snapRows.count() == 2)
+      assert(snapRows.select("k").collect().map(_.getString(0)).toSet == Set("****"))
+      // the next change batch updates a snapshot key: it merges, nothing parks
+      import org.apache.spark.sql.Row
+      spark.createDataFrame(java.util.Arrays.asList(
+          Row("update", 9001L, Row(5.0, 77L), "graft", "events",
+            java.sql.Timestamp.valueOf("2031-01-01 00:00:00"), 300000000L)),
+          ChangeEvents.schema)
+        .coalesce(1).write.mode("append").json(s"$root/src/events")
+      engine.processAllAvailable()
+      assert(!graft.streaming.Dlq.hasPendingBatches(spark, s"$root/dlq/events"))
+      assert(target.filter(col("key") === 9001L).select("value", "k").collect()
+        .map(r => (r.getDouble(0), r.getString(1))).toSeq == Seq((5.0, "****")))
+      assert(target.select("k").distinct().collect().map(_.getString(0)).toSet == Set("****"))
     } finally engine.stop()
   }
 
@@ -949,7 +988,7 @@ class EngineSpec extends SparkSpec {
       engine.pollOnce()
       // founding run appends the whole customer table
       assert(engine.tickCron(LocalDateTime.parse("2024-03-01T05:15:00")) ==
-        Seq(GraftEngine.ErJobIdOffset + 6))
+        Seq("er6"))
       val got = graft.operators.Dedup.entityClustersFromStore(spark, s"$root/erstore")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
       val want = graft.operators.Dedup.entityClusters(spark, sf)
@@ -958,7 +997,7 @@ class EngineSpec extends SparkSpec {
       // steady state: an unchanged source appends nothing and the
       // readout is stable (no duplicate edges from a re-run)
       assert(engine.tickCron(LocalDateTime.parse("2024-03-02T05:15:00")) ==
-        Seq(GraftEngine.ErJobIdOffset + 6))
+        Seq("er6"))
       val again = graft.operators.Dedup.entityClustersFromStore(spark, s"$root/erstore")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
       assert(again == want)
@@ -1116,6 +1155,42 @@ class EngineSpec extends SparkSpec {
     assert(cfg.ivmTasks.map(_.id) == Seq(3))
   }
 
+  test("every scheduled family parses, fires under its kind+id key at its default schedule, and skips malformed siblings") {
+    assert(Scheduled.Families.map(_.kind).distinct.size == 14)
+    val root = tmp()
+    // one entry shape carries every family's required fields: each
+    // parser reads its own and ignores the rest
+    def entry(id: Int, extra: String) =
+      s"""{ "id": $id, $extra "outDir": "$root/out", "indexDir": "$root/idx",
+         |  "storeDir": "$root/store", "targetDir": "$root/tgt", "table": "orders",
+         |  "zorderBy": ["o_orderkey", "o_custkey"], "tables": [],
+         |  "rules": [ {"name": "r", "column": "o_orderkey", "kind": "notNull"} ] }""".stripMargin
+    val src = s""""sourceDir": "$root/missing","""
+    Scheduled.Families.foreach { f =>
+      val key = s"${f.kind}5"
+      // siblings: 6 has a bad schedule, 7 has no sourceDir
+      val json = s"""{ "${f.configKey}": [ ${entry(5, src)},
+         |  ${entry(6, src + """ "schedule": "61 99 * * *",""")}, ${entry(7, "")} ] }""".stripMargin
+      assert(ConfigReader.parse(json).scheduled.map(t => (t.family, t.key, t.schedule)) ==
+        Seq((f, key, f.defaultSchedule)), f.kind)
+      val cfgPath = s"$root/${f.kind}.json"
+      writeConfig(cfgPath, json)
+      val alerts = new Alerts.Buffer
+      val engine = new GraftEngine(spark, cfgPath, alerts = alerts)
+      try {
+        engine.pollOnce()
+        val expr = Cron.parse(f.defaultSchedule)
+        val due = Iterator.iterate(LocalDateTime.parse("2024-03-01T00:00:00"))(_.plusMinutes(1))
+          .find(Cron.isDue(expr, _)).get
+        assert(engine.tickCron(due.minusMinutes(1)).isEmpty, f.kind)
+        assert(engine.tickCron(due) == Seq(key), f.kind)
+        // over a missing source the run fails or finds nothing; any
+        // alert it raised is the family's failure alert for this task
+        assert(alerts.drain().forall(a => a.kind == f.failedAlert && a.source == key), f.kind)
+      } finally engine.stop()
+    }
+  }
+
   test("scheduled training export: fires at its minute, manifest equals the operator, reload drops the job") {
     val root = tmp()
     val cfgPath = s"$root/engine.json"
@@ -1130,7 +1205,7 @@ class EngineSpec extends SparkSpec {
       // fires once in its minute (id in the training namespace), and the
       // at-most-once contract holds on a repeat tick
       assert(engine.tickCron(LocalDateTime.parse("2024-03-01T04:30:00")) ==
-        Seq(GraftEngine.TrainingJobIdOffset + 20))
+        Seq("training20"))
       assert(engine.tickCron(LocalDateTime.parse("2024-03-01T04:30:00")).isEmpty)
       val cols = Seq("doc_id", "copy_idx", "source", "n_tokens",
         "pack_group", "chunk_id", "spans_boundary")
@@ -1171,7 +1246,7 @@ class EngineSpec extends SparkSpec {
     try {
       engine.pollOnce()
       assert(engine.tickCron(LocalDateTime.parse("2024-03-01T05:15:00")) ==
-        Seq(GraftEngine.OptimizeJobIdOffset + 7))
+        Seq("optimize7"))
       assert(engine.tickCron(LocalDateTime.parse("2024-03-01T05:15:00")).isEmpty)
       // the mirror holds exactly the source rows, in numFiles files
       val src = spark.read.parquet(s"$sf/events.parquet")
@@ -1191,7 +1266,7 @@ class EngineSpec extends SparkSpec {
            |    "zorderBy": ["user_id", "no_such_col"] } ] }""".stripMargin)
       engine.pollOnce()
       assert(engine.tickCron(LocalDateTime.parse("2024-03-01T05:20:00")) ==
-        Seq(GraftEngine.OptimizeJobIdOffset + 8))
+        Seq("optimize8"))
       assert(alerts.drain().exists(_.kind == "optimize_failed"))
       engine.pollOnce() // still alive
     } finally engine.stop()
@@ -1215,7 +1290,7 @@ class EngineSpec extends SparkSpec {
       engine.pollOnce()
       // day 1: founding pass builds both indexes + the PQ codebook
       assert(engine.tickCron(LocalDateTime.parse("2024-03-01T05:10:00")) ==
-        Seq(GraftEngine.AnnIndexJobIdOffset + 4))
+        Seq("annIndex4"))
       val n0 = spark.read.parquet(s"$root/idx/ivf/cells").count()
       assert(n0 == Tables(spark, sf, "embeddings").count())
       assert(spark.read.parquet(s"$root/idx/codes_idx/codes").count() == n0)
@@ -1277,7 +1352,7 @@ class EngineSpec extends SparkSpec {
     try {
       engine.pollOnce()
       assert(engine.tickCron(LocalDateTime.parse("2024-03-01T06:45:00")) ==
-        Seq(GraftEngine.DqJobIdOffset + 3))
+        Seq("dq3"))
       val fired = alerts.drain().filter(_.kind == "dq_violation")
       // exactly the two violated rules alert; the passing rule is silent
       assert(fired.map(_.message).toSet ==
@@ -1288,7 +1363,7 @@ class EngineSpec extends SparkSpec {
         spark.read.parquet(s"$root/orders.parquet").schema)
         .write.mode("overwrite").parquet(s"$root/orders.parquet")
       assert(engine.tickCron(LocalDateTime.parse("2024-03-02T06:45:00")) ==
-        Seq(GraftEngine.DqJobIdOffset + 3))
+        Seq("dq3"))
       assert(alerts.drain().isEmpty)
     } finally engine.stop()
   }
@@ -1320,7 +1395,7 @@ class EngineSpec extends SparkSpec {
     try {
       engine.pollOnce()
       assert(engine.tickCron(LocalDateTime.parse("2024-03-01T05:15:00")) ==
-        Seq(GraftEngine.ChecksumJobIdOffset + 7))
+        Seq("checksum7"))
       val fired = alerts.drain().filter(_.kind == "checksum_mismatch")
       // exactly the drifted month alerts, naming both fingerprints
       assert(fired.map(_.message).count(_.startsWith(s"month $victimMonth:")) == 1)
@@ -1328,7 +1403,7 @@ class EngineSpec extends SparkSpec {
       // repair the target: the next day's run stays silent
       orders.write.mode("overwrite").parquet(s"$root/tgt/orders.parquet")
       assert(engine.tickCron(LocalDateTime.parse("2024-03-02T05:15:00")) ==
-        Seq(GraftEngine.ChecksumJobIdOffset + 7))
+        Seq("checksum7"))
       assert(alerts.drain().isEmpty)
     } finally engine.stop()
   }
@@ -1353,14 +1428,14 @@ class EngineSpec extends SparkSpec {
     try {
       engine.pollOnce()
       assert(engine.tickCron(LocalDateTime.parse("2024-03-01T04:50:00")) ==
-        Seq(GraftEngine.AnnEvalJobIdOffset + 9))
+        Seq("annEval9"))
       val fired = alerts.drain().filter(_.kind == "ann_recall_low")
       assert(fired.size == 1, s"expected a low-recall alert, got $fired")
       // maintenance appends the missing half: recall recovers, silent
       graft.operators.Similarity.appendToStoredIvf(
         emb.filter(col("vec_id") >= 16 && col("vec_id") % 2 =!= 0), s"$root/ivf")
       assert(engine.tickCron(LocalDateTime.parse("2024-03-02T04:50:00")) ==
-        Seq(GraftEngine.AnnEvalJobIdOffset + 9))
+        Seq("annEval9"))
       val after = alerts.drain()
       assert(!after.exists(_.kind == "ann_recall_low"), s"healed index paged: $after")
       assert(!after.exists(_.kind == "ann_eval_failed"))
@@ -1383,7 +1458,7 @@ class EngineSpec extends SparkSpec {
     try {
       engine.pollOnce()
       assert(engine.tickCron(LocalDateTime.parse("2024-03-01T04:55:00")) ==
-        Seq(GraftEngine.ModelEvalJobIdOffset + 3))
+        Seq("modelEval3"))
       val fired = alerts.drain()
       assert(fired.exists(_.kind == "model_agreement_low"), s"got $fired")
       assert(fired.exists(_.kind == "model_auc_low"), s"got $fired")
@@ -1399,7 +1474,7 @@ class EngineSpec extends SparkSpec {
            |] }""".stripMargin)
       engine.pollOnce()
       assert(engine.tickCron(LocalDateTime.parse("2024-03-02T04:55:00")) ==
-        Seq(GraftEngine.ModelEvalJobIdOffset + 3))
+        Seq("modelEval3"))
       val after = alerts.drain()
       assert(after.isEmpty, s"lenient bounds paged: $after")
     } finally engine.stop()
@@ -1420,7 +1495,7 @@ class EngineSpec extends SparkSpec {
     try {
       engine.pollOnce()
       assert(engine.tickCron(LocalDateTime.parse("2024-03-01T06:10:00")) ==
-        Seq(GraftEngine.PrivacyJobIdOffset + 4))
+        Seq("privacy4"))
       val fired = alerts.drain()
       assert(fired.exists(_.kind == "privacy_k_low"), s"got $fired")
       assert(fired.exists(_.kind == "privacy_l_low"), s"got $fired")
@@ -1434,7 +1509,7 @@ class EngineSpec extends SparkSpec {
            |] }""".stripMargin)
       engine.pollOnce()
       assert(engine.tickCron(LocalDateTime.parse("2024-03-02T06:10:00")) ==
-        Seq(GraftEngine.PrivacyJobIdOffset + 4))
+        Seq("privacy4"))
       val after = alerts.drain()
       assert(after.isEmpty, s"lenient bounds paged: $after")
     } finally engine.stop()
@@ -1453,7 +1528,7 @@ class EngineSpec extends SparkSpec {
     try {
       engine.pollOnce()
       assert(engine.tickCron(LocalDateTime.parse("2024-03-01T05:20:00")) ==
-        Seq(GraftEngine.GraphJobIdOffset + 6))
+        Seq("graph6"))
       assert(alerts.drain().isEmpty, "founding maintenance paged")
       val full = graft.operators.Graph.coPurchaseEdges(spark, sf).collect()
         .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
@@ -1462,7 +1537,7 @@ class EngineSpec extends SparkSpec {
       assert(stored() == full)
       // second tick: unchanged corpus, reconcile is a no-op, store intact
       assert(engine.tickCron(LocalDateTime.parse("2024-03-02T05:20:00")) ==
-        Seq(GraftEngine.GraphJobIdOffset + 6))
+        Seq("graph6"))
       assert(alerts.drain().isEmpty)
       assert(stored() == full)
       graft.operators.PlanCache.release()
@@ -1483,7 +1558,7 @@ class EngineSpec extends SparkSpec {
     try {
       engine.pollOnce()
       assert(engine.tickCron(LocalDateTime.parse("2024-03-01T06:25:00")) ==
-        Seq(GraftEngine.DriftJobIdOffset + 9))
+        Seq("drift9"))
       val fired = alerts.drain()
       assert(fired.nonEmpty && fired.forall(_.kind == "value_drift_high"), s"got $fired")
       // TVD is capped at 10⁶ → bound 2·10⁶ can never page
@@ -1494,7 +1569,7 @@ class EngineSpec extends SparkSpec {
            |] }""".stripMargin)
       engine.pollOnce()
       assert(engine.tickCron(LocalDateTime.parse("2024-03-02T06:25:00")) ==
-        Seq(GraftEngine.DriftJobIdOffset + 9))
+        Seq("drift9"))
       assert(alerts.drain().isEmpty, "lenient drift bound paged")
     } finally engine.stop()
   }
@@ -1513,7 +1588,7 @@ class EngineSpec extends SparkSpec {
     try {
       engine.pollOnce()
       assert(engine.tickCron(LocalDateTime.parse("2024-03-01T06:45:00")) ==
-        Seq(GraftEngine.GraphHealthJobIdOffset + 3))
+        Seq("graphHealth3"))
       val fired = alerts.drain()
       assert(fired.map(_.kind) == Seq("graph_modularity_low"), s"got $fired")
       assert(fired.head.message.contains("communities"))
@@ -1525,7 +1600,7 @@ class EngineSpec extends SparkSpec {
            |] }""".stripMargin)
       engine.pollOnce()
       assert(engine.tickCron(LocalDateTime.parse("2024-03-02T06:45:00")) ==
-        Seq(GraftEngine.GraphHealthJobIdOffset + 3))
+        Seq("graphHealth3"))
       assert(alerts.drain().isEmpty, "lenient modularity bound paged")
       // an empty graph is no-audit, never a page or an error
       val empty = GraftEngine.runGraphHealth(spark,
@@ -1551,7 +1626,7 @@ class EngineSpec extends SparkSpec {
     try {
       engine.pollOnce()
       assert(engine.tickCron(LocalDateTime.parse("2024-03-01T06:45:00")) ==
-        Seq(GraftEngine.GraphHealthJobIdOffset + 5))
+        Seq("graphHealth5"))
       val fired = alerts.drain()
       assert(fired.map(_.kind) == Seq.fill(3)("graph_modularity_drift"),
         s"got $fired")
@@ -1564,7 +1639,7 @@ class EngineSpec extends SparkSpec {
            |] }""".stripMargin)
       engine.pollOnce()
       assert(engine.tickCron(LocalDateTime.parse("2024-03-02T06:45:00")) ==
-        Seq(GraftEngine.GraphHealthJobIdOffset + 5))
+        Seq("graphHealth5"))
       assert(alerts.drain().isEmpty, "lenient drift bound paged")
       // no maxDriftMicro: the series is never run, never pages
       writeConfig(cfgPath,
@@ -1574,7 +1649,7 @@ class EngineSpec extends SparkSpec {
            |] }""".stripMargin)
       engine.pollOnce()
       assert(engine.tickCron(LocalDateTime.parse("2024-03-03T06:45:00")) ==
-        Seq(GraftEngine.GraphHealthJobIdOffset + 5))
+        Seq("graphHealth5"))
       assert(alerts.drain().isEmpty, "unconfigured drift watch paged")
     } finally engine.stop()
   }
@@ -1606,11 +1681,11 @@ class EngineSpec extends SparkSpec {
       engine.pollOnce()
       // 06:25 — the drift watchdog pages (impossible bound)
       assert(engine.tickCron(LocalDateTime.parse("2024-03-01T06:25:00")) ==
-        Seq(GraftEngine.DriftJobIdOffset + 1))
+        Seq("drift1"))
       assert(alerts.drain().exists(_.kind == "value_drift_high"))
       // 06:40 — the retrain answers with a founding promotion
       assert(engine.tickCron(LocalDateTime.parse("2024-03-01T06:40:00")) ==
-        Seq(GraftEngine.RetrainJobIdOffset + 2))
+        Seq("retrain2"))
       assert(alerts.drain().exists(_.kind == "model_promoted"))
       // the serving face reads the just-promoted version
       val scored = graft.operators.ModelStore
@@ -1633,7 +1708,7 @@ class EngineSpec extends SparkSpec {
     try {
       engine.pollOnce()
       assert(engine.tickCron(LocalDateTime.parse("2024-03-01T03:40:00")) ==
-        Seq(GraftEngine.RetrainJobIdOffset + 7))
+        Seq("retrain7"))
       val fired = alerts.drain()
       assert(fired.exists(_.kind == "model_promoted"), s"got $fired")
       assert(!fired.exists(_.kind == "model_retrain_failed"), s"got $fired")
@@ -1642,7 +1717,7 @@ class EngineSpec extends SparkSpec {
       // second tick: unchanged corpus retrains to identical weights —
       // hysteresis holds, no promotion page, version untouched
       assert(engine.tickCron(LocalDateTime.parse("2024-03-02T03:40:00")) ==
-        Seq(GraftEngine.RetrainJobIdOffset + 7))
+        Seq("retrain7"))
       assert(alerts.drain().isEmpty, "a held retrain paged")
       assert(graft.operators.ModelStore.liveModel(spark, s"$root/model") == live)
       graft.operators.PlanCache.release()
